@@ -17,7 +17,6 @@ ROOT = os.path.dirname(HERE)
 OUT = os.path.join(ROOT, ".bench_build")
 CLASSES = os.path.join(OUT, "classes")
 STAMP = os.path.join(OUT, "stamp.json")
-ORACLE_SQL = os.path.join(OUT, "oracle_sql.json")
 SPARK_JARS = os.path.join(os.environ.get("SPARK_HOME", "/opt/spark"), "jars")
 
 # Spark on JDK 17 needs these when started outside spark-submit; the same
@@ -69,7 +68,7 @@ def ensure():
     run-time classpath."""
     srcs = sources()
     stamp = digest(srcs)
-    if os.path.exists(STAMP) and os.path.exists(ORACLE_SQL):
+    if os.path.exists(STAMP):
         with open(STAMP) as fh:
             if json.load(fh).get("sources") == stamp:
                 return classpath()
@@ -88,11 +87,6 @@ def ensure():
            "-cp", os.pathsep.join(jars), "-d", CLASSES, "@" + argfile]
     if subprocess.run(cmd, stdout=sys.stderr).returncode != 0:
         raise BuildError("compilation failed")
-    # the oracle SQL is a property of the build: dump it once per build
-    dump = subprocess.run(["java", *ADD_OPENS, "-cp", classpath(), "perfbench.Main",
-                           "--oracles", ORACLE_SQL], stdout=sys.stderr)
-    if dump.returncode != 0:
-        raise BuildError("oracle SQL dump failed")
     with open(STAMP, "w") as fh:
         json.dump({"sources": stamp}, fh)
     return classpath()

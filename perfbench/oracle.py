@@ -43,7 +43,7 @@ def digest(cursor):
 
 def connect(data_dir):
     con = duckdb.connect()
-    con.execute("SET threads TO 2")
+    con.execute(f"SET threads TO {len(os.sched_getaffinity(0))}")
     for t in TABLES:
         p = os.path.join(data_dir, f"{t}.parquet")
         if os.path.exists(p):

@@ -36,9 +36,13 @@ def _length(i):
     return 250 + (i * 37) % 150
 
 
+# random byte -> base: 3 of 256 (about 1%) are N
+_BASE = bytes((ord("N") if b < 3 else ord("ACGT"[b % 4])) for b in range(256))
+
+
 def _bases(rnd, n):
-    s = "".join(rnd.choice("ACGT") if rnd.random() > 0.01 else "N" for _ in range(n))
-    return "N" + s[1:] if rnd.random() < 0.1 else s
+    s = rnd.randbytes(n).translate(_BASE).decode()
+    return "N" + s[1:] if rnd.random() < 0.1 else s  # one read in ten starts with N
 
 
 def _next_offset(rnd, co, cl, nl):

@@ -32,6 +32,12 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = build.ROOT
 DATA = {"loops": os.path.join(HERE, "data", "sf0.01")}
 ORACLE_CACHE = os.path.join(build.OUT, "oracle")
+# 4000 path reads make 6001 reads, 2.2 MB: 29x below the 64 MB at which
+# AssemblyCli leaves LocalAssembly for the Spark route. On 4 cores a warm
+# pass takes about 5.4 s at 2.2 MB, 6.6 s at 4.4 MB and 8.7 s at 8.8 MB.
+# The 48 runs of a benchmark check must end within 3420 s next to loops
+# runs of about 70 s; ten 4.4 MB runs averaged 65 s, which left under a
+# tenth to spare, so the input is the largest size measured that fits.
 ASSEMBLY_PATH_READS = 4000
 JVM_LIMIT_S = 150  # a run must end within 180 s, oracle checks included
 
@@ -52,12 +58,6 @@ def git_sha():
         return r.stdout.strip() if r.returncode == 0 else None
     except (OSError, subprocess.SubprocessError):
         return None
-
-
-def catalog():
-    """{"entries": {workload: [name]}, "sql": {name: oracle SQL}} from the build."""
-    with open(build.ORACLE_SQL) as fh:
-        return json.load(fh)
 
 
 def run_jvm(cp, args, run_dir, limit_s):
@@ -84,7 +84,7 @@ def run_jvm(cp, args, run_dir, limit_s):
 
 def check_catalog(record, workload, run_dir):
     """Names of entries whose written output differs from the DuckDB oracle."""
-    sqls = catalog()["sql"]
+    sqls = record["oracle_sql"]
     con = oracle.connect(DATA[workload])
     wrong = {}
     for name, fp in record["expected"].items():
@@ -148,7 +148,9 @@ def main():
             args += ["--data", DATA[a.workload]]
         if fresh:
             t0 = time.monotonic()  # the first run in a checkout may take longer: it builds
+        t_jvm = time.monotonic()
         run_jvm(cp, args, run_dir, max(30, JVM_LIMIT_S - (time.monotonic() - t0)))
+        t_check = time.monotonic()
         with open(os.path.join(run_dir, "out", "result.json")) as fh:
             record = json.load(fh)
 
@@ -158,6 +160,7 @@ def main():
                 wrong["golden"] = f"3-read sample assembled to {str(record.get('golden'))[:80]!r}"
         else:
             wrong.update(check_catalog(record, a.workload, run_dir))
+        context.update(jvm_s=round(t_check - t_jvm, 2), oracle_s=round(time.monotonic() - t_check, 2))
         attempted = failed = 0
         for p in record["passes"]:
             for name, e in p["entries"].items():
@@ -167,6 +170,11 @@ def main():
                     wrong.setdefault(name, f"pass {p['pass']}: {e['fp']}")
         metrics = stats.per_layer(record) if a.trace else stats.end_to_end(record)
         context.update(pass_s=[round(stats.pass_seconds(p), 4) for p in record["passes"]],
+                       step_s=[{n: round(e["s"], 3) for n, e in p["entries"].items()} for p in record["passes"]],
+                       heap_mb=[round(p["heap_live_mb"], 1) for p in record["passes"]],
+                       jit_s=[round(p["jit_s"], 2) for p in record["passes"]],
+                       session_s=record["session_s"], setup_staged_s=record["setup_staged_s"],
+                       check_s=record["check_s"],
                        conf=record["conf"],
                        wrong=wrong, all_metrics=metrics)
         line = stats.result_line(metrics, units, correct=not wrong,

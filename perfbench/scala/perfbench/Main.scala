@@ -16,16 +16,17 @@ import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 /** The JVM side of the benchmark. It runs one workload in one Spark
-  * session: set-up (session start, a cold pass that stages every index
-  * into a fresh root, written outputs for the oracle check), then warm
-  * passes until `--seconds` have elapsed, then writes raw timings,
-  * fingerprints and (with `--trace 1`) layer counters and spans as JSON
-  * for `run.py`, which turns them into metrics.
+  * session: set-up (session start and a cold run of every step, which
+  * stages every index into a fresh root), then the untimed checks
+  * (written outputs for the oracle check, the reference engine), then
+  * warm-up passes, then measured passes until `--seconds` have elapsed,
+  * and writes raw timings, fingerprints, the entries' oracle SQL and
+  * (with `--trace 1`) layer counters and spans as JSON for `run.py`,
+  * which turns them into metrics.
   *
   * Usage: `perfbench.Main --workload <loops|assembly> --seed <n>
   * --seconds <s> --trace <0|1> --data <dir> --out <dir> --cpus <n>
-  * [--reads <tsv> --source <id> --dest <id> --golden <tsv>]`, or
-  * `perfbench.Main --oracles <file>` to write the entries' oracle SQL.
+  * [--reads <tsv> --source <id> --dest <id> --golden <tsv>]`.
   */
 object Main {
   /** `loops`: entries whose cost is jobs × a fixed per-job cost: the
@@ -33,6 +34,17 @@ object Main {
     * stitch fixpoint (one checkpoint per superstep).
     */
   val Loops = Seq("q189_graph_walk", "q74_stitch_iterative")
+
+  /** Passes after set-up that are run but not measured. The first pass
+    * after set-up still differs from the ones after it (on 4 cores,
+    * assembly's ran about 15% slower). Measured passes are then at least
+    * the third run of every step: the set-up ran each once, and for
+    * `loops` the check ran each once more.
+    */
+  val WarmupPasses = 1
+
+  /** Measured passes a run makes at the least, whatever `--seconds` is. */
+  val MinMeasuredPasses = 3
 
   final class Args(a: Array[String]) {
     private val m = a.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
@@ -66,15 +78,12 @@ object Main {
       s"${if (r.isNullAt(2)) 0 else r.getLong(2)}"
   }
 
-  /** Driver heap in use after a full GC, not counting the blocks in
-    * Spark's memory store (checkpoints and caches), whose release waits
-    * on the asynchronous context cleaner.
+  /** Driver heap in use after a full GC, blocks in Spark's memory store
+    * that the program still holds included.
     */
   private def heapLiveMb(spark: SparkSession): Double = {
-    spark.catalog.clearCache()
-    System.gc()
-    (ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed -
-      SparkInternals.storageMemoryUsed) / 1048576.0
+    SparkInternals.fullGc(spark.sparkContext)
+    ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
   }
 
   private def error(e: Throwable): String =
@@ -87,11 +96,12 @@ object Main {
     def steps: Seq[String]
     /** The order of one pass; catalog entries are permuted by the seed. */
     def order(rnd: Random): Seq[String]
-    /** Cold first execution of every step. Returns each step's expected
-      * fingerprint, or the error that makes it wrong.
-      */
-    def prepare(order: Seq[String]): Map[String, Either[String, String]]
     def step(name: String): String
+    /** Untimed checks after the cold run, whose fingerprints (or errors)
+      * are `cold`. Returns each step's expected fingerprint, or the error
+      * that makes it wrong.
+      */
+    def check(cold: Map[String, Either[String, String]]): Map[String, Either[String, String]]
     def extra(): Map[String, Double] = Map.empty
   }
 
@@ -99,20 +109,27 @@ object Main {
       val steps: Seq[String]) extends Workload {
     def order(rnd: Random): Seq[String] = rnd.shuffle(steps)
 
-    /** Writes each output for the oracle check in `run.py`; the timed
-      * passes must reproduce the fingerprint of what was written.
+    def step(name: String): String = fingerprint(SparkEntry.queries(name)(spark, dir))
+
+    /** Writes each output for the oracle check in `run.py`; what was
+      * written must have the fingerprint of the cold run, and the timed
+      * passes must reproduce it.
       */
-    def prepare(order: Seq[String]): Map[String, Either[String, String]] =
-      order.map { name =>
-        name -> (try {
+    def check(cold: Map[String, Either[String, String]]): Map[String, Either[String, String]] =
+      cold.map {
+        case (name, Right(fp)) => name -> (try {
           val path = s"$out/verify/$name"
           SparkEntry.queries(name)(spark, dir).coalesce(1)
             .write.mode("overwrite").parquet(path)
-          Right(fingerprint(spark.read.parquet(path)))
+          val written = fingerprint(spark.read.parquet(path))
+          if (written == fp) Right(fp)
+          else Left(s"written output $written differs from the cold run's $fp")
         } catch { case e: Throwable => Left(error(e)) })
-      }.toMap
+        case failed => failed
+      }
 
-    def step(name: String): String = fingerprint(SparkEntry.queries(name)(spark, dir))
+    def oracleSql: Map[String, String] =
+      steps.map(n => n -> SparkEntry.oracleSql.getOrElse(n, null)).toMap
   }
 
   /** `AssemblyCli`'s Spark route, split into its four actions. */
@@ -153,9 +170,7 @@ object Main {
     /** The Spark contig must equal `LocalAssembly`'s, character for
       * character; the timed passes must then reproduce its fingerprint.
       */
-    def prepare(order: Seq[String]): Map[String, Either[String, String]] = {
-      val got = order.map(s => s -> (try Right(step(s))
-        catch { case e: Throwable => Left(error(e)) })).toMap
+    def check(got: Map[String, Either[String, String]]): Map[String, Either[String, String]] = {
       val want = try Right(local()) catch { case e: Throwable => Left(error(e)) }
       (got("fold"), want) match {
         case (Right(fp), Right(span)) if contig != span.content =>
@@ -181,16 +196,8 @@ object Main {
     }
   }
 
-  def main(argv: Array[String]): Unit =
-    if (argv.headOption.contains("--oracles")) {
-      val sql = SparkEntry.oracleSql
-      val dump = Map("entries" -> Map("loops" -> Loops),
-        "sql" -> Loops.map(n => n -> sql.getOrElse(n, null)).toMap)
-      Files.writeString(Paths.get(argv(1)),
-        new ObjectMapper().registerModule(DefaultScalaModule).writeValueAsString(dump))
-    } else run(new Args(argv))
-
-  private def run(a: Args): Unit = {
+  def main(argv: Array[String]): Unit = {
+    val a = new Args(argv)
     val workload = a("workload")
     val seed = a("seed").toLong
     val seconds = a("seconds").toDouble
@@ -205,7 +212,10 @@ object Main {
     val spark = session(cpus)
     val sessionS = (System.nanoTime() - t0) / 1e9
     val w: Workload = workload match {
-      case "loops" => new Catalog(spark, a("data"), out, Loops)
+      case "loops" =>
+        val c = new Catalog(spark, a("data"), out, Loops)
+        result("oracle_sql") = c.oracleSql
+        c
       case "assembly" => new AssemblyRoute(spark, a("reads"), a("source").toLong,
         a("dest").toLong, out)
       case other => sys.error(s"unknown workload $other")
@@ -213,13 +223,19 @@ object Main {
     val rnd = new Random(seed)
     Staged.stagingSecondsAndReset()
     val t1 = System.nanoTime()
-    val prepared = w.prepare(w.order(rnd))
+    // set-up is the session and one cold run of every step, as in a pass
+    val cold = w.order(rnd).map(s => s -> (try Right(w.step(s))
+      catch { case e: Throwable => Left(error(e)) })).toMap
     val setupS = sessionS + (System.nanoTime() - t1) / 1e9
+    spark.catalog.clearCache()
     result("setup_s") = setupS
     result("session_s") = sessionS
     result("setup_staged_s") = Staged.stagingSecondsAndReset()
-    result("expected") = prepared.map { case (k, v) => k -> v.fold(_ => null, identity) }
-    result("errors") = prepared.collect { case (k, Left(e)) => k -> e }
+    val t2 = System.nanoTime()
+    val checked = w.check(cold)
+    result("check_s") = (System.nanoTime() - t2) / 1e9
+    result("expected") = checked.map { case (k, v) => k -> v.fold(_ => null, identity) }
+    result("errors") = checked.collect { case (k, Left(e)) => k -> e }
     a.get("data").foreach(d => result("stage_root") = graft.ops.Dedup.stageRoot(d))
 
     if (workload == "assembly") {
@@ -231,18 +247,22 @@ object Main {
 
     val trace = if (traced) Some(new Trace(spark)) else None
     val passes = mutable.ArrayBuffer.empty[Map[String, Any]]
-    val tm = System.nanoTime()
+    var tm = System.nanoTime()
     var pass = 0
     var last = 0.0
-    // at least three passes, so the median is not a mean; another one
-    // only if it should end in time
-    while (pass < 3 || (System.nanoTime() - tm) / 1e9 + last <= seconds) {
+    // the warm-up passes, then at least MinMeasuredPasses, so the median
+    // is not a mean; another one only if it should end within `seconds`
+    // of the first measured pass
+    while (pass < WarmupPasses + MinMeasuredPasses ||
+        (System.nanoTime() - tm) / 1e9 + last <= seconds) {
+      if (pass == WarmupPasses) tm = System.nanoTime()
       val p0 = System.nanoTime()
+      val jit0 = ManagementFactory.getCompilationMXBean.getTotalCompilationTime
       pass += 1
-      // a traced run traces every other pass from the third on (the first
-      // two still run one-off lazy work), so the overhead of tracing is
-      // measured inside one run
-      val tracing = trace.filter(_ => pass >= 3 && pass % 2 == 1)
+      val measured = pass > WarmupPasses
+      // a traced run traces every other measured pass, so the overhead of
+      // tracing is measured inside one run
+      val tracing = trace.filter(_ => measured && (pass - WarmupPasses) % 2 == 1)
       val order = w.order(rnd)
       tracing.foreach(_.attach(pass))
       val pass0 = System.currentTimeMillis()
@@ -264,9 +284,10 @@ object Main {
       tracing.foreach(_.record(Span("pass", s"pass-$pass", null, pass, pass0,
         System.currentTimeMillis())))
       val layers = tracing.map(_.detach()).getOrElse(Map.empty)
-      passes += Map("pass" -> pass, "traced" -> tracing.isDefined,
-        "order" -> order, "entries" -> entries, "staged_s" -> stagedS,
-        "heap_live_mb" -> heapLiveMb(spark), "layers" -> layers)
+      passes += Map("pass" -> pass, "measured" -> measured,
+        "traced" -> tracing.isDefined, "order" -> order, "entries" -> entries,
+        "staged_s" -> stagedS, "heap_live_mb" -> heapLiveMb(spark), "layers" -> layers,
+        "jit_s" -> (ManagementFactory.getCompilationMXBean.getTotalCompilationTime - jit0) / 1e3)
       last = (System.nanoTime() - p0) / 1e9
     }
     result("passes") = passes

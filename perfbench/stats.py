@@ -46,7 +46,7 @@ def pass_seconds(p):
 
 
 def end_to_end(record):
-    passes = record["passes"]
+    passes = [p for p in record["passes"] if p["measured"]]
     steps = passes[0]["entries"].keys()
     per_step = [median([p["entries"][s]["s"] for p in passes]) for s in steps]
     geo = math.exp(sum(math.log(max(x, 1e-9) * 1e3) for x in per_step) / len(per_step))
@@ -63,12 +63,9 @@ PHASES = ("analysis", "optimization", "planning")
 
 def per_layer(record):
     """Layer metrics from the traced passes of a traced run."""
-    passes = record["passes"]
+    passes = [p for p in record["passes"] if p["measured"]]
     traced = [p for p in passes if p["traced"]]
-    # untraced passes after the first, which still carries warm-up; a run
-    # with three passes has only the second
-    plain = [p for p in passes if not p["traced"] and p["pass"] > 1] or \
-        [p for p in passes if not p["traced"]]
+    plain = [p for p in passes if not p["traced"]]
     spans = record["spans"]
     rows = []
     for p in traced:

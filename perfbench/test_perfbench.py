@@ -71,10 +71,15 @@ class SelfTimeTest(unittest.TestCase):
 
 def fake_record():
     entries = {"a": {"s": 1.0, "fp": "x"}, "b": {"s": 0.5, "fp": "y"}}
-    passes = [{"pass": 1, "traced": False, "entries": entries, "staged_s": 0.0,
+    warmup = {"a": {"s": 9.0, "fp": "x"}, "b": {"s": 9.0, "fp": "y"}}
+    passes = [{"pass": 1, "measured": False, "traced": False, "entries": warmup, "staged_s": 0.0,
+               "heap_live_mb": 900.0, "layers": {}},
+              {"pass": 2, "measured": True, "traced": True, "entries": entries, "staged_s": 0.0,
+               "heap_live_mb": 101.0, "layers": {"jobs": 2.0, "stages": 2.0, "tasks": 8.0}},
+              {"pass": 3, "measured": True, "traced": False, "entries": entries, "staged_s": 0.0,
                "heap_live_mb": 100.0, "layers": {}},
-              {"pass": 2, "traced": True, "entries": entries, "staged_s": 0.0,
-               "heap_live_mb": 101.0, "layers": {"jobs": 2.0, "stages": 2.0, "tasks": 8.0}}]
+              {"pass": 4, "measured": True, "traced": False, "entries": entries, "staged_s": 0.0,
+               "heap_live_mb": 102.0, "layers": {}}]
     spans = [{"kind": "pass", "name": "pass-2", "parent": None, "pass": 2, "start": 0, "end": 1500},
              {"kind": "entry", "name": "a", "parent": "pass-2", "pass": 2, "start": 0, "end": 1000},
              {"kind": "entry", "name": "b", "parent": "pass-2", "pass": 2, "start": 1000, "end": 1500},
@@ -111,6 +116,12 @@ class MetricsTest(unittest.TestCase):
         self.assertAlmostEqual(m["catalyst.plan_s"], 0.04)
         self.assertEqual(m["scheduler.jobs"], 2.0)
         self.assertAlmostEqual(m["trace.overhead_s"], 0.0)
+
+    def test_warmup_passes_are_not_measured(self):
+        m = stats.end_to_end(fake_record())
+        self.assertAlmostEqual(m["pass_s"], 1.5)
+        self.assertAlmostEqual(m["entry_geomean_ms"], (1000 * 500) ** 0.5)
+        self.assertAlmostEqual(m["heap_live_mb"], 101.0)
 
     def test_undeclared_metric_is_refused(self):
         units = stats.declared()["end_to_end"]
